@@ -5,7 +5,7 @@ Reference step → engine stage:
 
 1. STEP1 producer (CSV discovery + publish, RUN_ALL_STEPS.py:120-157)
    → :func:`ingest_csv_dir`: discover entity CSVs, permissive-scan,
-   envelope-wrap into the streaming inbox.
+   envelope-wrap into the streaming inbox; one worker per entity.
 2. STEP2 raw consumer (bounded drain → raw zone, :159-196)
    + STEP3 quality engine (validate/split, :198-237)
    → :func:`drain_and_validate`: one checkpointed AvailableNow stream
@@ -20,6 +20,14 @@ Reference step → engine stage:
    :func:`build_marts`: merged views + conflict queries + star build
    over the clean zone.
 
+The reference drains its per-entity queues one after another on one
+thread; here the entities fan out. Ingest runs one worker per entity
+and all entity streams drain at once on the shared cores. What the
+reference keeps per queue stays per entity: an entity's CSV files
+publish to its inbox in discovery order, and its ordering and
+first-wins dedup state live inside its own stream, so running entities
+concurrently changes no zone row.
+
 A ``run_id`` scopes every output path (reference ``DB_{run_id}``).
 Each stage returns DataFrames/paths so callers can stop anywhere; the
 only materializations are the zone writes themselves.
@@ -28,15 +36,18 @@ only materializations are the zone writes themselves.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.cleaning import transform_entity
 from .operators.entity_rules import ruleset_for
 from .operators.quality import reject_duplicates
-from .operators.reconcile import merged_view, source_counts
+from .operators.reconcile import source_counts
 from .sources.csv import (
     RAW_CSV_LAYOUTS,
     discover_csvs,
@@ -44,7 +55,7 @@ from .sources.csv import (
     with_line_numbers,
 )
 from .streaming.envelope import encode_envelope
-from .streaming.pipeline import ZonePaths, consume_inbox
+from .streaming.pipeline import ZonePaths, consume_inbox, zone_counts
 
 #: natural key per entity for the ordered first-wins dedup (V2)
 DEDUP_KEYS: dict[str, list[str]] = {
@@ -62,119 +73,144 @@ class PipelineRun:
     zone_counts: dict[str, dict[str, int]] = field(default_factory=dict)
 
 
+def _per_entity(spark: SparkSession, fn, entities: list[str]) -> dict:
+    """``{entity: fn(entity)}`` with one thread per entity. Workers
+    inherit the caller's Spark local properties and tags, so a job
+    group set by the caller (and its cancelJobGroup) covers their jobs.
+    Every future is read, so the first worker failure re-raises here."""
+    if not entities:
+        return {}
+    target = inheritable_thread_target(spark)(fn)
+    with ThreadPoolExecutor(max_workers=len(entities)) as pool:
+        futures = {entity: pool.submit(target, entity) for entity in entities}
+    return {entity: f.result() for entity, f in futures.items()}
+
+
 def ingest_csv_dir(
     spark: SparkSession, data_dir: str, zones: ZonePaths, *, run_id: str, source: str = "csv"
 ) -> dict[str, int]:
     """STEP1: discover entity CSVs and publish envelope-wrapped rows to
-    the per-entity inbox. Corrupt CSV lines are forwarded raw — the
-    consumer dead-letters them (matching queue poison semantics)."""
-    counts: dict[str, int] = {}
+    the per-entity inbox, one worker per entity. Corrupt CSV lines are
+    forwarded raw — the consumer dead-letters them (matching queue
+    poison semantics)."""
+    files: dict[str, list[str]] = {}
     for item in discover_csvs(data_dir):
-        entity = item["entity_type"]
-        if entity is None:
-            continue
-        # cache: Spark disallows predicates over ONLY the corrupt-record
-        # column of a raw CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-        raw = with_line_numbers(read_entity_csv(spark, item["file_path"], entity)).cache()
-        try:
-            ok = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-            enveloped = encode_envelope(
-                ok, source=source, entity_type=entity, run_id=run_id, order_col="_line_no"
-            )
-            out = os.path.join(zones.inbox, entity)
-            enveloped.write.mode("append").text(out)
-            counts[entity] = counts.get(entity, 0) + ok.count()
-        finally:
-            raw.unpersist()  # both readers (write + count) are done
-    return counts
+        if item["entity_type"] is not None:
+            files.setdefault(item["entity_type"], []).append(item["file_path"])
+
+    def ingest_entity(entity: str) -> int:
+        n = 0
+        # one file after another: concurrent appends to one output
+        # directory would share its _temporary dir
+        for path in files[entity]:
+            # cache: Spark disallows predicates over ONLY the corrupt-record
+            # column of a raw CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
+            raw = with_line_numbers(read_entity_csv(spark, path, entity)).cache()
+            try:
+                ok = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+                enveloped = encode_envelope(
+                    ok, source=source, entity_type=entity, run_id=run_id, order_col="_line_no"
+                )
+                enveloped.write.mode("append").text(os.path.join(zones.inbox, entity))
+                n += ok.count()
+            finally:
+                raw.unpersist()  # both readers (write + count) are done
+        return n
+
+    return _per_entity(spark, ingest_entity, list(files))
 
 
-def drain_and_validate(
-    spark: SparkSession, zones: ZonePaths, entities: list[str]
-) -> dict[str, dict[str, int]]:
-    """STEP2+3+4 fused: per entity, drain the inbox exactly once
-    (AvailableNow), transform to the canonical layout, validate with
-    the entity RuleSet (+ ordered dedup where keyed), split into
-    clean/error parquet zones. Entities drain as independent streams —
-    on a cluster they run concurrently; here sequentially."""
-    results: dict[str, dict[str, int]] = {}
-    for entity in entities:
+class _EntityValidator:
+    """The ruleset ``consume_inbox`` applies to one entity's decoded
+    rows: transform to the canonical layout, validate with the entity
+    RuleSet, then ordered first-wins dedup where keyed. Entity, rules
+    and keys are bound per instance, so concurrent streams never share
+    them."""
+
+    def __init__(self, entity: str):
+        self.entity = entity
         # per-SOURCE validator routing (reference main.py:674-681): the
         # inbox carries the CSV feed, so mon rows get mon_csv_rules —
         # which validate the RAW layout (price string parseability, the
         # category NAME) BEFORE the transform; every other entity
         # validates the canonical post-transform layout.
-        rules = ruleset_for(entity, source="csv")
+        self.rules = ruleset_for(entity, source="csv")
+        self.dedup_keys = DEDUP_KEYS.get(entity)
 
-        # decode → transform happens inside the consumer's foreachBatch
-        # via a RuleSet whose validate() is applied around the transform;
-        # we wrap by subclassing-by-composition: consume_inbox validates
-        # the DECODED rows, so hand it a ruleset that sequences both.
-        class _TransformThenValidate:
-            def validate(self, df: DataFrame) -> DataFrame:
-                if rules.entity == "mon_csv":
-                    # validate raw, then transform; the verdict columns
-                    # are _-prefixed and survive the transform's
-                    # metadata passthrough
-                    validated = transform_entity(entity, rules.validate(df))
-                else:
-                    validated = rules.validate(transform_entity(entity, df))
-                keys = DEDUP_KEYS.get(entity)
-                if keys:
-                    validated = reject_duplicates(
-                        validated.drop("_is_valid"),
-                        keys,
-                        [F.col("_line_no").asc_nulls_last()],
-                        f"duplicate {keys[0]}",
-                    )
-                return validated
+    def validate(self, df: DataFrame) -> DataFrame:
+        if self.rules.entity == "mon_csv":
+            # the verdict columns are _-prefixed and survive the
+            # transform's metadata passthrough
+            validated = transform_entity(self.entity, self.rules.validate(df))
+        else:
+            validated = self.rules.validate(transform_entity(self.entity, df))
+        if self.dedup_keys:
+            validated = reject_duplicates(
+                validated.drop("_is_valid"),
+                self.dedup_keys,
+                [F.col("_line_no").asc_nulls_last()],
+                f"duplicate {self.dedup_keys[0]}",
+            )
+        return validated
 
-        # the envelope payload is the RAW CSV layout (all strings);
-        # canonicalization happens in the transform inside the drain
-        from pyspark.sql import types as T
 
-        raw_payload = T.StructType(
-            [T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]]
-        )
-        q = consume_inbox(
-            spark,
-            zones,
-            entity=entity,
-            data_schema=raw_payload,
-            ruleset=_TransformThenValidate(),  # duck-typed: only .validate used
-        )
-        q.awaitTermination()
-        counts = {}
-        for zone_name, path in (("clean", zones.clean), ("error", zones.error)):
-            try:
-                counts[zone_name] = spark.read.parquet(os.path.join(path, entity)).count()
-            except Exception:
-                counts[zone_name] = 0
-        results[entity] = counts
-    return results
+def drain_and_validate(
+    spark: SparkSession, zones: ZonePaths, entities: list[str]
+) -> dict[str, dict[str, int]]:
+    """STEP2+3+4 fused: drain every entity's inbox exactly once
+    (AvailableNow), transform to the canonical layout, validate with
+    the entity RuleSet (+ ordered dedup where keyed), split into
+    clean/error parquet zones. All entity streams start before any is
+    awaited, so the drains overlap on the shared cores; each stream
+    keeps its own ordering and dedup state (the reference's per-queue
+    state), so no row crosses entities. If one stream fails, the others
+    are stopped before its exception propagates. Zone counts are then
+    read concurrently, one worker per entity."""
+    queries = []
+    try:
+        for entity in entities:
+            # the envelope payload is the RAW CSV layout (all strings);
+            # canonicalization happens in the transform inside the drain
+            raw_payload = T.StructType(
+                [T.StructField(c, T.StringType()) for c in RAW_CSV_LAYOUTS[entity]]
+            )
+            queries.append(
+                consume_inbox(
+                    spark,
+                    zones,
+                    entity=entity,
+                    data_schema=raw_payload,
+                    ruleset=_EntityValidator(entity),  # duck-typed: only .validate used
+                )
+            )
+        pending = queries
+        while pending:  # short waits: a failure anywhere surfaces promptly
+            pending = [q for q in pending if not q.awaitTermination(0.1)]
+    finally:
+        for q in queries:
+            if q.isActive:
+                q.stop()
+    return _per_entity(spark, lambda entity: zone_counts(spark, zones, entity), entities)
 
 
 def build_marts(
     spark: SparkSession, zones: ZonePaths, entities: list[str]
 ) -> dict[str, DataFrame]:
-    """Post-hoc layer: merged views (single-source runs union
-    trivially) + per-source count report over the clean zone — the
-    first marts the reference builds in SQL Server. DWH star builds
-    continue from these via operators.dwh."""
+    """Post-hoc layer: merged views (the clean zone's ``_source``
+    lineage column becomes the view's trailing ``source`` tag) +
+    per-source count report over the clean zone — the first marts the
+    reference builds in SQL Server. Nothing here runs a job. DWH star
+    builds continue from these via operators.dwh."""
     marts: dict[str, DataFrame] = {}
     for entity in entities:
         clean = spark.read.parquet(os.path.join(zones.clean, entity))
-        merged = merged_view({src: df for src, df in _by_source(clean)})
+        merged = clean.select(
+            *[c for c in clean.columns if c != "_source"], F.col("_source").alias("source")
+        )
         merged.createOrReplaceTempView(f"{entity}_merged")
         marts[f"{entity}_merged"] = merged
         marts[f"{entity}_source_counts"] = source_counts(merged)
     return marts
-
-
-def _by_source(clean: DataFrame):
-    sources = [r["_source"] for r in clean.select("_source").distinct().collect()]
-    for s in sources:
-        yield s, clean.filter(F.col("_source") == s).drop("_source")
 
 
 def run_full_pipeline(

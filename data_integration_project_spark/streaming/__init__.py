@@ -8,6 +8,7 @@ from .pipeline import (
     produce_to_inbox,
     run_inbox_pipeline,
     streaming_window_counts,
+    zone_counts,
 )
 from .upsert import scd2_stream_upsert
 
@@ -20,4 +21,5 @@ __all__ = [
     "consume_inbox",
     "run_inbox_pipeline",
     "streaming_window_counts",
+    "zone_counts",
 ]

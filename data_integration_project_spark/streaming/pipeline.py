@@ -22,9 +22,11 @@ validated micro-batch to its two zone sinks.
 
 from __future__ import annotations
 
+import contextlib
 import os
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -146,8 +148,12 @@ def consume_inbox(
                     os.path.join(zones.error, f"{entity}_poison")
                 )
         finally:
-            for df in cached:  # one leaked cache per batch adds up on a long stream
-                df.unpersist()
+            # one leaked cache per batch adds up on a long stream. A stop()
+            # landing mid-batch can fail one unpersist with an interrupt;
+            # the stack still runs the others (dependents first)
+            with contextlib.ExitStack() as stack:
+                for df in cached:
+                    stack.callback(df.unpersist)
 
     return (
         raw.writeStream.foreachBatch(process_batch)
@@ -177,12 +183,20 @@ def run_inbox_pipeline(
         dedup_keys=dedup_keys,
     )
     q.awaitTermination()
+    return zone_counts(spark, zones, entity)
+
+
+def zone_counts(spark: SparkSession, zones: ZonePaths, entity: str) -> dict[str, int]:
+    """Row counts of the entity's clean and error zones. A zone the
+    drain never wrote (no error sink without a ruleset) counts 0; any
+    other read failure propagates."""
     counts = {}
     for zone_name, path in (("clean", zones.clean), ("error", zones.error)):
-        full = os.path.join(path, entity)
         try:
-            counts[zone_name] = spark.read.parquet(full).count()
-        except Exception:
+            counts[zone_name] = spark.read.parquet(os.path.join(path, entity)).count()
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             counts[zone_name] = 0
     return counts
 

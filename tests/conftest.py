@@ -5,6 +5,13 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # fast session startup in tests
+# The session's 48g driver default lets the heap grow past physical
+# memory on small hosts, where the kernel OOM-kills the suite's JVM; the
+# suite's live heap stays well under a quarter of RAM.
+os.environ.setdefault(
+    "SPARK_GRAFT_DRIVER_MEM",
+    f"{min(48 * 1024, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**22)}m",
+)
 
 
 def pytest_configure(config):

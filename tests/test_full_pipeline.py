@@ -10,9 +10,15 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.errors import StreamingQueryException
 
-from data_integration_project_spark.pipeline import run_full_pipeline
+from data_integration_project_spark import pipeline
+from data_integration_project_spark.pipeline import (
+    drain_and_validate,
+    ingest_csv_dir,
+    run_full_pipeline,
+)
+from data_integration_project_spark.streaming.pipeline import ZonePaths
 
 _CSVS = {
     "khachhang.csv": [
@@ -49,14 +55,18 @@ _CSVS = {
 }
 
 
+def _write_csvs(data: str, csvs: dict[str, list[str]]) -> None:
+    os.makedirs(data)
+    for name, lines in csvs.items():
+        with open(os.path.join(data, name), "w", encoding="utf-8-sig") as f:
+            f.write("\n".join(lines) + "\n")
+
+
 @pytest.fixture()
 def pipeline_dirs():
     root = tempfile.mkdtemp(prefix="full_pipe_")
     data = os.path.join(root, "data")
-    os.makedirs(data)
-    for name, lines in _CSVS.items():
-        with open(os.path.join(data, name), "w", encoding="utf-8-sig") as f:
-            f.write("\n".join(lines) + "\n")
+    _write_csvs(data, _CSVS)
     yield root, data
     shutil.rmtree(root, ignore_errors=True)
 
@@ -106,3 +116,73 @@ def test_run_full_pipeline(spark, pipeline_dirs):
     }
     assert hist["khach_hang"] == (5, 1, 4)
     assert hist["dat_hang"] == (3, 1, 2)
+
+
+def test_all_rows_rejected_gives_empty_mart(spark, tmp_path):
+    data = str(tmp_path / "data")
+    _write_csvs(data, {"dathang.csv": [_CSVS["dathang.csv"][0], "2,1,1,0,2024-01-06,DONE"]})
+    run = run_full_pipeline(spark, data, str(tmp_path / "out"), run_id="t2")
+    assert run.zone_counts == {"dat_hang": {"clean": 0, "error": 1}}
+    assert spark.table("dat_hang_merged").count() == 0
+
+
+def _zone_rows(spark, zones: ZonePaths, entity: str) -> list[tuple]:
+    out = []
+    for zone in (zones.clean, zones.error):
+        # extract_time is the transform's wall-clock load stamp
+        df = spark.read.parquet(os.path.join(zone, entity)).drop("extract_time")
+        out.append((df.columns, sorted(map(tuple, df.collect()), key=repr)))
+    return out
+
+
+def test_concurrent_drain_matches_sequential(spark, pipeline_dirs):
+    """Every entity's stream drained at once lands exactly the zone rows
+    (verdicts and _errors included) of draining one entity at a time."""
+    root, data = pipeline_dirs
+    concurrent, sequential = ZonePaths(os.path.join(root, "a")), ZonePaths(os.path.join(root, "b"))
+    entities = sorted(ingest_csv_dir(spark, data, concurrent, run_id="eq"))
+    assert "mon" in entities and "khach_hang" in entities
+    # both sides drain the same inbox files (extract_time included)
+    shutil.copytree(concurrent.inbox, sequential.inbox)
+
+    got = drain_and_validate(spark, concurrent, entities)
+    want = {}
+    for entity in entities:
+        want.update(drain_and_validate(spark, sequential, [entity]))
+    assert got == want
+    for entity in entities:
+        assert _zone_rows(spark, concurrent, entity) == _zone_rows(spark, sequential, entity), entity
+
+
+def test_failing_stream_stops_the_others(spark, pipeline_dirs, monkeypatch):
+    root, data = pipeline_dirs
+    zones = ZonePaths(os.path.join(root, "out"))
+    entities = sorted(ingest_csv_dir(spark, data, zones, run_id="boom"))
+    transform = pipeline.transform_entity
+
+    def failing_transform(entity, df):
+        if entity == "mon":
+            raise RuntimeError("mon validator broke")
+        return transform(entity, df)
+
+    monkeypatch.setattr(pipeline, "transform_entity", failing_transform)
+    with pytest.raises(StreamingQueryException, match="mon validator broke"):
+        drain_and_validate(spark, zones, entities)
+    assert spark.streams.active == []
+
+
+def test_ingest_sums_files_of_one_entity_in_caller_job_group(spark, tmp_path):
+    header, *rows = _CSVS["khachhang.csv"]
+    data = str(tmp_path / "data")
+    _write_csvs(data, {"khachhang.csv": [header, *rows[:3]], "khachhang_2.csv": [header, *rows[3:]]})
+    zones = ZonePaths(str(tmp_path / "out"))
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest_scope", "ingest workers inherit the caller's job group")
+    try:
+        counts = ingest_csv_dir(spark, data, zones, run_id="two")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"khach_hang": len(rows)}
+    assert spark.read.text(os.path.join(zones.inbox, "khach_hang")).count() == len(rows)
+    assert sc.statusTracker().getJobIdsForGroup("ingest_scope")

@@ -8,6 +8,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from data_integration_project_spark.operators.quality import RuleSet, positive
@@ -18,6 +19,7 @@ from data_integration_project_spark.streaming import (
     produce_to_inbox,
     run_inbox_pipeline,
     streaming_window_counts,
+    zone_counts,
 )
 from data_integration_project_spark.streaming.pipeline import ZonePaths
 
@@ -87,6 +89,13 @@ def test_inbox_pipeline_validates_and_is_exactly_once(spark, zones, sf_small):
     assert counts2 == counts
     err = spark.read.parquet(os.path.join(zones.error, "customer"))
     assert err.filter(F.col("_errors") == "c_acctbal must be > 0").count() == n_bad
+
+
+def test_zone_counts_zero_only_for_missing_zone(spark, zones):
+    assert zone_counts(spark, zones, "customer") == {"clean": 0, "error": 0}
+    os.makedirs(os.path.join(zones.clean, "customer"))  # exists but holds no parquet
+    with pytest.raises(AnalysisException):
+        zone_counts(spark, zones, "customer")
 
 
 def test_streaming_window_counts_match_batch(spark, sf_small):
